@@ -53,6 +53,8 @@ object LoadMain {
   }
 
   private def runOn(opts: Cli.Opts, input: String, spark: SparkSession): Unit = {
+    // parsed once: the cleanup, the load and the summary line all use it
+    val manifest = Dump.readManifest(spark, input)
     opts.value("jdbc-url").foreach { url =>
       // --recreate-database <name>: database-level recreate before the load
       // (≙ xload -m recreate → backend.recreate_database(), load.py:34) —
@@ -95,8 +97,9 @@ object LoadMain {
         println(s"Recreated database $db")
       }
       val cleanup = explicit.orElse(recreatedDb.map(_ => "recreate"))
-      Dump.loadIntoJdbc(spark, input, Cli.jdbcConfig(opts, url), cleanup = cleanup)
-      println(s"Loaded ${Dump.readManifest(spark, input).loadOrder.size} tables into $url")
+      Dump.loadIntoJdbc(spark, input, manifest, Cli.jdbcConfig(opts, url), cleanup,
+        restoreConstraints = true, restoreSequences = true, verifyCounts = true)
+      println(s"Loaded ${manifest.loadOrder.size} tables into $url")
       return
     }
 
@@ -107,7 +110,7 @@ object LoadMain {
       case Some("recreate") =>
         fs.delete(tp, true)
       case Some("truncate") =>
-        Dump.readManifest(spark, input).loadOrder.foreach { t =>
+        manifest.loadOrder.foreach { t =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$target/$t.parquet"), true)
         }
       case Some(other) =>
@@ -115,7 +118,7 @@ object LoadMain {
       case None => ()
     }
 
-    Dump.loadInto(spark, input, target)
-    println(s"Loaded ${Dump.readManifest(spark, input).loadOrder.size} tables into $target")
+    Dump.loadInto(spark, input, target, manifest)
+    println(s"Loaded ${manifest.loadOrder.size} tables into $target")
   }
 }

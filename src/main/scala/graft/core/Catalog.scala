@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Foreign-key edge: `table.column` references `foreignTable.foreignColumn`.
   *
@@ -39,6 +41,18 @@ final case class ForeignKey(
   * server — the reference's actual deployment shape (point at a database,
   * get a consistent partial dump). Closure/Dump/TableGraph only ever see
   * `table(name)` + metadata, so every operator works identically over both.
+  *
+  * One instance resolves each table at most once and pins it at first use:
+  * the parquet file listing and schema (or the JDBC relation with its
+  * partition bounds) of the first `table(name)` call serve every later
+  * call, so all pulls of one dump read the same files, and a dump's dozen
+  * `table` calls resolve each table once instead of once each. A flat
+  * directory of Spark-written parquet resolves without a Spark job: its
+  * schema is read from a footer on the driver; any other layout pays one
+  * schema-inference job. Each call still returns the pinned relation under
+  * fresh attribute ids, so two `table(name)` results join with each other
+  * exactly like two independent reads. Open a new Catalog to see files
+  * written since.
   */
 final class Catalog(
     @transient val spark: SparkSession,
@@ -69,14 +83,28 @@ final class Catalog(
     val columnSqlTypes: Map[String, Map[String, String]] = Map.empty)
     extends Serializable with AutoCloseable {
 
+  // table → its pinned resolution (see the class doc); @transient lazy: a
+  // deserialized catalog starts empty, like its reader
+  @transient private lazy val resolved =
+    collection.concurrent.TrieMap.empty[String, Catalog.Pinned]
+
   def table(name: String): DataFrame = {
     require(tables.contains(name), s"unknown table: $name")
+    // getOrElseUpdate may build a spare Pinned under a race, but only the
+    // stored one is ever forced: one resolution per table
+    PlanBridge.freshInstance(
+      resolved.getOrElseUpdate(name, new Catalog.Pinned(resolve(name))).df)
+  }
+
+  private def resolve(name: String): DataFrame =
     // Option(...).flatten: a deserialized catalog has reader == null
     Option(reader).flatten match {
       case Some(read) => read(name)
-      case None       => spark.read.parquet(s"$dir/$name.parquet")
+      case None =>
+        val path = s"$dir/$name.parquet"
+        Catalog.footerSchema(spark, path)
+          .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     }
-  }
 
   /** Exact row count WITHOUT a Spark job for parquet-backed tables: the
     * footer of every parquet file carries its block row counts, so the
@@ -146,6 +174,37 @@ final class Catalog(
 }
 
 object Catalog {
+
+  /** A table's resolution, run on first access. */
+  private final class Pinned(resolve: => DataFrame) {
+    lazy val df: DataFrame = resolve
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver.
+    * For a flat directory Spark takes it from the first data file's
+    * footer, where Spark's writer stores the table schema, but it reads
+    * that footer in a Spark job. None, and inference as usual, for any
+    * other layout: partition subdirectories, summary files, schema
+    * merging, or files without a Spark schema in the footer.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    scala.util.Try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val root = new org.apache.hadoop.fs.Path(path)
+      val all = root.getFileSystem(conf).listStatus(root)
+      val names = all.map(_.getPath.getName)
+      val data = all.filterNot(st => st.getPath.getName.matches("[_.].*"))
+      if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean ||
+          names.exists(n => n == "_metadata" || n == "_common_metadata") ||
+          data.isEmpty || data.exists(!_.isFile)) None
+      else {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(data.head, conf))
+        val kv = try r.getFooter.getFileMetaData.getKeyValueMetaData finally r.close()
+        Option(kv.get("org.apache.spark.sql.parquet.row.metadata"))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+      }
+    }.toOption.flatten
 
   /** Catalog over a live JDBC database — the reference's headline use case
     * (xdump/postgresql.py:66: point at a server, get a consistent partial

@@ -1,7 +1,8 @@
 package graft.sources
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
 import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,7 +40,8 @@ final case class DumpSpec(
   *
   * The reference packs CSVs into one zip (xdump/base.py:100); a directory of
   * partitioned files is the distributed equivalent — each table writes in
-  * parallel from every executor, no single-writer bottleneck.
+  * parallel from every executor, no single-writer bottleneck, in one file
+  * per `spark.sql.files.maxPartitionBytes` of its estimated size.
   *
   * Write path executes every operator exactly once: tables spool to disk
   * the moment the closure finalizes them (Closure.relatedData onFinal), and
@@ -47,6 +49,14 @@ final case class DumpSpec(
   * pushdown into the fresh parquet) instead of recomputing the selection.
   * Row counts and sequence state ride on the write job via `observe()` —
   * the manifest costs zero extra Spark jobs.
+  *
+  * Job budget per dump + load: one write job per dumped table, the
+  * closure's pull and checkpoint jobs, and one write job per loaded table.
+  * Nothing else: the Catalog resolves a Spark-written parquet table from
+  * its footer on the driver (other sources: one schema job per table, as
+  * it pins each table at first use), read-backs carry the schema they
+  * were written with, and the manifest is written and parsed on the
+  * driver.
   */
 object Dump {
 
@@ -59,12 +69,11 @@ object Dump {
     QueryLog.time("Total execution time: %s") {
     val metrics = collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
-    def spool(t: String, df: DataFrame): DataFrame =
-      if (!spec.dumpData) df
-      else {
+    def writeTable(t: String, df: => DataFrame): Unit =
+      try {
         val pk = catalog.primaryKey(t).head
         val obs = Observation()
-        val observed = df.observe(obs,
+        val observed = fileSized(df).observe(obs,
           count(lit(1)).as("n"), max(col(pk).cast("long")).as("mx"))
         val w = observed.write.mode(SaveMode.Overwrite)
           .option("compression", spec.compression)
@@ -77,24 +86,77 @@ object Dump {
         val m = obs.get
         metrics(t) = (m("n").asInstanceOf[Long],
           Option(m("mx")).collect { case l: java.lang.Long => l.longValue }.getOrElse(0L))
+      } catch {
+        case NonFatal(e) => throw new RuntimeException(
+          s"dump of table $t into $path/data/$t failed: ${e.getMessage}", e)
+      }
+
+    // A partial table's written files replace its selection for the
+    // downstream pulls, read back with the schema it was written with.
+    def spool(t: String, df: DataFrame): DataFrame =
+      if (!spec.dumpData) df
+      else {
+        writeTable(t, df)
         readData(catalog.spark, path, t, spec.format, df.schema)
       }
 
-    val closed = Closure.relatedData(
-      catalog, spec.fullTables, spec.partialTables, onFinal = spool)
-    // Full tables are never pulled *into* (only out of), so their writes
-    // have no mutual ordering constraint — submit them as concurrent Spark
-    // jobs. The scheduler interleaves their stages across the cluster, so
-    // a dump with many whole-copied tables isn't serialized on its largest
-    // one. Partial tables keep the closure's finalization order (each
-    // write feeds the downstream pulls that read it back).
-    val writes: Seq[Future[DataFrame]] =
-      spec.fullTables.map(t => Future(spool(t, catalog.table(t)))(ExecutionContext.global))
-    writes.foreach(w => Await.result(w, Duration.Inf))
+    // A table no FK points into is final from the start: the closure
+    // never pulls rows into it. That holds for every full table and for
+    // the partial tables no edge references (the selection seeds). Their
+    // writes have no ordering constraint, so they all start at once, as
+    // concurrent Spark jobs; the full-table ones run on beside the
+    // closure's serial pull chain, and a seed enters the closure as its
+    // read-back. The other partial tables keep the closure's
+    // finalization order (each write feeds the downstream pulls that
+    // read it back). Whatever fails, every write has settled before
+    // write() returns or throws.
+    val referenced = catalog.foreignKeys.map(_.foreignTable).toSet
+    val seeds =
+      if (!spec.dumpData) Map.empty[String, DataFrame]
+      // a table listed as both full and partial is the closure's error
+      else spec.partialTables.filter { case (t, _) =>
+        !referenced(t) && !spec.fullTables.contains(t) }
+    def start[T](body: => T): Future[T] = Future(blocking(body))(ExecutionContext.global)
+    val fullWrites: Seq[Future[Unit]] =
+      if (!spec.dumpData) Nil
+      else spec.fullTables.map(t => start(writeTable(t, catalog.table(t))))
+    val seedWrites = seeds.toSeq.sortBy(_._1).map { case (t, df) => t -> start(spool(t, df)) }
+    val writes = fullWrites ++ seedWrites.map(_._2)
+    def settle(): Seq[Throwable] =
+      writes.flatMap(f => Await.ready(f, Duration.Inf).value.get.failed.toOption)
+    val closed =
+      try Closure.relatedData(
+        catalog, spec.fullTables,
+        spec.partialTables ++ seedWrites.map { case (t, w) => t -> Await.result(w, Duration.Inf) },
+        onFinal = (t, df) => if (seeds.contains(t)) df else spool(t, df))
+      catch {
+        case e: Throwable =>
+          settle().filterNot(_ eq e).foreach(e.addSuppressed)
+          throw e
+      }
+    settle() match {
+      case Seq() => ()
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+    }
 
     val tables = (spec.fullTables ++ closed.keys).distinct
     if (spec.dumpSchema) writeSchema(catalog, tables.sorted, path)
     writeManifest(catalog, tables, spec, metrics.toMap, path)
+  }
+
+  /** `df` in at most one partition per `spark.sql.files.maxPartitionBytes`
+    * (Spark's read split size) of its estimated size, so a written file
+    * holds up to that much. Unsized, a selection keeps the partitions of
+    * its source files and shuffles: a small one is written, and loaded
+    * back, as many tiny files at one task each. Filters and semi-joins
+    * estimate at most their input's size; a plan of unknown size
+    * (Spark's default estimate, e.g. a JDBC scan) is left as it is.
+    */
+  private def fileSized(df: DataFrame): DataFrame = {
+    val perFile = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes"))
+    val files = (df.queryExecution.optimizedPlan.stats.sizeInBytes + perFile - 1) / perFile
+    if (files >= Int.MaxValue) df else df.coalesce(math.max(1, files.toInt))
   }
 
   /** CREATE TABLE DDL per table — the `pg_dump -s` analog
@@ -268,26 +330,62 @@ object Dump {
         t -> ms.map(m => m.group(2) -> m.group(3)).toMap }
   }
 
-  /** Reads and parses `manifest.json` with Spark's JSON reader (robust to
-    * whitespace/ordering, unlike string scraping).
+  /** Reads and parses `manifest.json` on the driver (Jackson, from Spark's
+    * own classpath): robust to key order and whitespace, and no Spark job.
+    * A missing, truncated or mistyped manifest fails loudly, naming the
+    * file and the offending field.
     */
   def readManifest(spark: SparkSession, path: String): Manifest = {
-    import spark.implicits._
-    val raw = readText(spark, s"$path/manifest.json")
-    val df = spark.read.option("multiLine", "true").json(Seq(raw).toDS)
-    val row = df.head()
-    val format = row.getAs[String]("format")
-    val order = row.getAs[collection.Seq[String]]("load_order").toSeq
-    val tables = df
-      .select(explode(col("tables")).as("t"))
-      .select(col("t.table"), col("t.rows"), col("t.sequence"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    import com.fasterxml.jackson.databind.JsonNode
+    val file = s"$path/manifest.json"
+    def bad(msg: String, cause: Throwable = null): Nothing =
+      throw new java.io.IOException(s"dump manifest $file: $msg", cause)
+    val root =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(readText(spark, file))
+      catch {
+        case e: java.io.FileNotFoundException => bad("not found", e)
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          bad(s"truncated or not valid JSON (${e.getOriginalMessage})", e)
+        case e: java.io.IOException => bad(s"unreadable (${e.getMessage})", e)
+      }
+    if (root == null || !root.isObject) bad("empty or not a JSON object")
+    def field(node: JsonNode, name: String, where: String): JsonNode =
+      Option(node.get(name)).filterNot(_.isNull)
+        .getOrElse(bad(s"missing field '$name'$where"))
+    def text(node: JsonNode, name: String, where: String = ""): String = {
+      val v = field(node, name, where)
+      if (!v.isTextual) bad(s"field '$name'$where is not a string: $v")
+      v.asText
+    }
+    def long(node: JsonNode, name: String, where: String): Long = {
+      val v = field(node, name, where)
+      if (!v.isIntegralNumber || !v.canConvertToLong)
+        bad(s"field '$name'$where is not an integer: $v")
+      v.asLong
+    }
+    def array(node: JsonNode, name: String): Seq[JsonNode] = {
+      val v = field(node, name, "")
+      if (!v.isArray) bad(s"field '$name' is not an array: $v")
+      (0 until v.size).map(v.get)
+    }
+    val format = text(root, "format")
+    val order = array(root, "load_order").zipWithIndex.map { case (t, i) =>
+      if (!t.isTextual) bad(s"load_order[$i] is not a table name: $t")
+      t.asText
+    }
+    val tables = array(root, "tables").zipWithIndex.map { case (t, i) =>
+      val name = text(t, "table", s" of tables[$i]")
+      val where = s" of table $name"
+      (name, long(t, "rows", where), long(t, "sequence", where))
+    }
     Manifest(format, order,
       tables.map(t => t._1 -> t._2).toMap,
       tables.map(t => t._1 -> t._3).toMap)
   }
 
+  /** A dumped table's files, read with the schema they were written with:
+    * no format infers a schema here, so a read-back costs no Spark job.
+    */
   private def readData(
       spark: SparkSession, path: String, t: String,
       format: String, schema: StructType): DataFrame =
@@ -299,23 +397,30 @@ object Dump {
         // line means a truncated/partial shard, and the load must fail
         // loudly like the csv/parquet paths do, not restore fewer rows
         Jsonl.readStrict(spark, s"$path/data/$t", schema)
-      case "orc" => spark.read.orc(s"$path/data/$t")
-      case _ => spark.read.parquet(s"$path/data/$t")
+      case "orc" => spark.read.schema(schema).orc(s"$path/data/$t")
+      case _ => spark.read.schema(schema).parquet(s"$path/data/$t")
     }
 
   /** Reads a dump back: tables as DataFrames keyed by name, in manifest load
-    * order (≙ xdump/base.py:220 `load`). CSV reads use the dumped DDL for
-    * exact types — header-only inference would widen everything to string.
+    * order (≙ xdump/base.py:220 `load`). Every format reads with the dumped
+    * DDL's schema: exact types (header-only CSV inference would widen
+    * everything to string) and no schema-inference job.
     */
-  def load(spark: SparkSession, path: String): Seq[(String, DataFrame)] = {
-    val manifest = readManifest(spark, path)
-    manifest.loadOrder.map { t =>
-      // first statement is the CREATE TABLE; constraint ALTERs may follow
-      val schema = StructType.fromDDL(
-        readText(spark, s"$path/schema/$t.sql").takeWhile(_ != ';')
-          .stripPrefix(s"CREATE TABLE $t (").stripSuffix(")"))
-      t -> readData(spark, path, t, manifest.format, schema)
-    }
+  def load(spark: SparkSession, path: String): Seq[(String, DataFrame)] =
+    load(spark, path, readManifest(spark, path))
+
+  /** [[load]] with the dump's manifest already parsed. */
+  def load(spark: SparkSession, path: String, manifest: Manifest): Seq[(String, DataFrame)] =
+    manifest.loadOrder.map(t => t -> loadTable(spark, path, t, manifest.format))
+
+  /** One dumped table, read with its dumped DDL's schema. */
+  private def loadTable(
+      spark: SparkSession, path: String, t: String, format: String): DataFrame = {
+    // first statement is the CREATE TABLE; constraint ALTERs may follow
+    val schema = StructType.fromDDL(
+      readText(spark, s"$path/schema/$t.sql").takeWhile(_ != ';')
+        .stripPrefix(s"CREATE TABLE $t (").stripSuffix(")"))
+    readData(spark, path, t, format, schema)
   }
 
   /** Loads a dump into a target directory of parquet tables — the offline
@@ -325,28 +430,35 @@ object Dump {
     * analog of the reference replaying `dump/sequences.sql` on load
     * (xdump/postgresql.py:136-146, base.py:227).
     */
-  def loadInto(spark: SparkSession, dumpPath: String, targetDir: String): Unit = {
-    val recorded = readManifest(spark, dumpPath).rows
+  def loadInto(spark: SparkSession, dumpPath: String, targetDir: String): Unit =
+    loadInto(spark, dumpPath, targetDir, readManifest(spark, dumpPath))
+
+  /** [[loadInto]] with the dump's manifest already parsed. */
+  def loadInto(
+      spark: SparkSession, dumpPath: String, targetDir: String,
+      manifest: Manifest): Unit = {
     // Parquet targets enforce no constraints, so unlike the JDBC load the
     // per-table copies have no ordering requirement — run them as
     // concurrent jobs (guide §2.6; the Dump.write full-table discipline):
     // a roundtrip restore isn't serialized on its largest table, and each
-    // copy keeps its own observe()-riding count verification.
+    // copy keeps its own observe()-riding count verification. Each copy
+    // reads its table on its own thread, and `blocking` lets every copy
+    // submit its job at once, however few threads the shared pool has.
     graft.core.EpochStore.inParallel(
-      load(spark, dumpPath).map { case (t, df) => () => {
+      manifest.loadOrder.map { t => () => blocking {
+        val df = loadTable(spark, dumpPath, t, manifest.format)
         // same observe()-riding count verification as loadIntoJdbc: a
         // vanished dump shard must abort, not restore fewer rows
         val obs = Observation(s"graft_loadinto_$t")
         df.observe(obs, count(lit(1)).as("rows"))
           .write.mode(SaveMode.Overwrite).parquet(s"$targetDir/$t.parquet")
-        recorded.get(t).foreach { expect =>
+        manifest.rows.get(t).foreach { expect =>
           val written = obs.get("rows").asInstanceOf[Long]
           if (written != expect) sys.error(
             s"load of $t wrote $written rows but the manifest recorded $expect — " +
               s"dump at $dumpPath is truncated or partially written")
         }
       }}: _*)
-    val manifest = readManifest(spark, dumpPath)
     val seqs = manifest.loadOrder.map { t =>
       s"""  {"table": "$t", "value": ${manifest.sequences.getOrElse(t, 0L)}}"""
     }
@@ -389,9 +501,22 @@ object Dump {
       restoreConstraints: Boolean = true,
       restoreSequences: Boolean = true,
       verifyCounts: Boolean = true): Unit =
+    loadIntoJdbc(spark, dumpPath, readManifest(spark, dumpPath), cfg, cleanup,
+      restoreConstraints, restoreSequences, verifyCounts)
+
+  /** [[loadIntoJdbc]] with the dump's manifest already parsed. */
+  def loadIntoJdbc(
+      spark: SparkSession,
+      dumpPath: String,
+      manifest: Manifest,
+      cfg: JdbcConfig,
+      cleanup: Option[String],
+      restoreConstraints: Boolean,
+      restoreSequences: Boolean,
+      verifyCounts: Boolean): Unit =
     // -v total-time surface (reference base.py:222 wraps the whole load)
     QueryLog.time("Total execution time: %s") {
-    val tables = load(spark, dumpPath) // manifest load order
+    val tables = load(spark, dumpPath, manifest) // manifest load order
     cleanup.foreach { method =>
       val childrenFirst = tables.map(_._1).reverse
       method match {
@@ -407,7 +532,6 @@ object Dump {
           sys.error(s"unknown cleanup method (use truncate|recreate): $other")
       }
     }
-    val recorded = readManifest(spark, dumpPath).rows
     // recreate re-creates tables through the JDBC writer — restore the
     // dumped native bounded-character types so VARCHAR(32) doesn't come
     // back as CLOB/TEXT; absent sidecar (older dumps) = writer defaults
@@ -430,7 +554,7 @@ object Dump {
         catch { case _: java.sql.SQLException => 0L }
       Jdbc.writeTable(df, cfg, t, SaveMode.Append,
         columnTypes = nativeTypes.getOrElse(t, Map.empty))
-      if (verifyCounts) recorded.get(t).foreach { expect =>
+      if (verifyCounts) manifest.rows.get(t).foreach { expect =>
         val written = Jdbc.countTable(cfg, t) - before
         if (written != expect) sys.error(
           s"load of $t wrote $written rows but the manifest recorded $expect — " +
@@ -442,7 +566,7 @@ object Dump {
     // recreate path, base.py:227).
     if (cleanup.contains("recreate") && restoreConstraints)
       replayConstraints(spark, dumpPath, cfg, tables.map(_._1))
-    if (restoreSequences) replaySequences(spark, dumpPath, cfg)
+    if (restoreSequences) replaySequences(spark, dumpPath, manifest, cfg)
   }
 
   /** Identifier fragment for the shape patterns: a double-quoted name
@@ -560,8 +684,12 @@ object Dump {
     */
   def replaySequences(
       spark: SparkSession, dumpPath: String,
-      cfg: JdbcConfig): Map[String, Option[String]] = {
-    val manifest = readManifest(spark, dumpPath)
+      cfg: JdbcConfig): Map[String, Option[String]] =
+    replaySequences(spark, dumpPath, readManifest(spark, dumpPath), cfg)
+
+  private def replaySequences(
+      spark: SparkSession, dumpPath: String, manifest: Manifest,
+      cfg: JdbcConfig): Map[String, Option[String]] =
     manifest.loadOrder.map { t =>
       val pkCol = schemaStatements(spark, dumpPath, t).collectFirst {
         case PkStmt(_, cols) => splitColumnList(cols).head
@@ -574,7 +702,6 @@ object Dump {
           catch { case e: java.sql.SQLException => Some(String.valueOf(e.getMessage)) }
       })
     }.toMap
-  }
 
   /** Sequence state of a load target — what the next id per table should
     * start after. Reads `_sequences.json` written by `loadInto`.
